@@ -7,6 +7,11 @@ layer (plain Python rows), and Spark DataFrames are *derived views* rebuilt
 lazily when a version counter moves.  Reads therefore always see their own
 writes; the analytic operators never know the difference.
 
+Each view is an Arrow-built local relation (:func:`local_view`): it plans as
+a ``LocalTableScan``, so Catalyst folds the filters, projections and limits
+of a point lookup into the relation while optimizing and no Spark job runs
+for them.  Only joins and aggregates over a view still launch jobs.
+
 Two store flavors share one read interface:
 
 - :class:`MutableCatalog` — driver-side staging, for the reference's OLTP
@@ -24,8 +29,10 @@ from __future__ import annotations
 import itertools
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 NODE_SCHEMA = T.StructType(
     [
@@ -62,6 +69,26 @@ def _stringify_props(props: dict[str, Any] | None) -> dict[str, str] | None:
         else:
             out[k] = str(v)
     return out
+
+
+def local_view(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A DataFrame over driver-side rows, planned as a ``LocalTableScan``.
+
+    Rows are checked with the same verifier ``createDataFrame(rows, schema)``
+    applies, because pyarrow alone would coerce some mismatches silently
+    (``1.5`` into a long field becomes ``1``).  The rows then travel as one
+    Arrow table, which Spark keeps as a local relation instead of an RDD.
+    """
+    verify = T._make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 class GraphStore:
@@ -276,7 +303,7 @@ class MutableCatalog(GraphStore):
             (r["node_id"], r["_id"], r["_collection"], _stringify_props(r["props"]))
             for r in self._nodes.values()
         ]
-        return self.spark.createDataFrame(rows, schema=NODE_SCHEMA)
+        return local_view(self.spark, rows, NODE_SCHEMA)
 
     def _build_edges_df(self) -> DataFrame:
         rows = [
@@ -292,7 +319,7 @@ class MutableCatalog(GraphStore):
             )
             for r in self._edges.values()
         ]
-        return self.spark.createDataFrame(rows, schema=EDGE_SCHEMA)
+        return local_view(self.spark, rows, EDGE_SCHEMA)
 
     def _build_docs_df(self, collection: str) -> DataFrame:
         docs = list(self._docs.get(collection, {}).values())
@@ -301,13 +328,5 @@ class MutableCatalog(GraphStore):
             raise ValueError(
                 f"collection {collection!r} needs an explicit schema to derive a DataFrame"
             )
-        rows = [tuple(_extract_path(d, f.name) for f in schema.fields) for d in docs]
-        return self.spark.createDataFrame(rows, schema=schema)
-
-
-def _extract_path(doc: dict[str, Any], field: str) -> Any:
-    """Fetch a possibly-nested value; nested struct fields come back as dicts."""
-    val = doc.get(field)
-    if isinstance(val, dict):
-        return val
-    return val
+        rows = [tuple(d.get(f.name) for f in schema.fields) for d in docs]
+        return local_view(self.spark, rows, schema)

@@ -1,31 +1,40 @@
-"""Iterative BFS shortest path (reference ``shortestPathTo``, SURVEY.md G8).
+"""BFS shortest paths (reference ``shortestPathTo``, SURVEY.md G8).
 
 The reference delegates to Neo4j's ``shortestPath(a-[:t*..15]->b)`` with a
 hard 15-hop bound (reference src/extendDocument.coffee:352-366,
 ``levelDeepness = 15`` at :359) and takes whichever single path Neo4j
-returns.  Spark realization: frontier-expansion via self-joins on the edges
-DataFrame — one Spark job per hop, exactly how GraphFrames implements BFS
-under the hood (join-based message passing).
+returns.  Two realizations share one expansion step (join the frontier with
+the directed edges, keep the smallest path per reached node):
+
+- :func:`shortest_path` (one pair, the per-document API) holds its frontier
+  and ``visited`` set on the driver.  Each hop ships the frontier as a local
+  relation, runs one collect of the expansion, and prunes visited nodes and
+  checks for the target in Python; nothing replays earlier hops.
+- :func:`shortest_paths_from` (one path per origin, the batch queries) keeps
+  everything distributed: all origins advance together as DataFrames, with
+  ``localCheckpoint`` cutting the lineage every hop.
 
 Determinism (the oracle hash-compares): among equal-length paths we pin the
 lexicographically-smallest node-id sequence, which `F.min` over the path
 array gives directly (Spark arrays order lexicographically).
-
-Scale notes: the frontier is re-keyed on the join key each hop; ``visited``
-pruning is a broadcastable anti-join at moderate frontier sizes.  Lineage is
-cut with ``localCheckpoint`` every few hops so 15-hop plans don't blow up
-the optimizer.  For all-pairs / landmark workloads you'd switch to a
-Pregel-style aggregate-messages loop over the same edges DataFrame.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from mongraph_spark.catalog import GraphStore
+from mongraph_spark.catalog import GraphStore, local_view
+from mongraph_spark.sparkutil import bounded_collect
 
 LEVEL_DEEPNESS = 15  # reference src/extendDocument.coffee:359
+FRONTIER_SCHEMA = T.StructType(
+    [
+        T.StructField("node", T.LongType(), False),
+        T.StructField("path", T.ArrayType(T.LongType(), False), False),
+    ]
+)
 
 
 def _directed_edges(edges: DataFrame, types: list[str] | None, direction: str) -> DataFrame:
@@ -49,45 +58,40 @@ def shortest_path(
     types: list[str] | None = None,
     direction: str = "outgoing",
     max_hops: int = LEVEL_DEEPNESS,
-    checkpoint_every: int = 4,
 ) -> list[int] | None:
     """Return the node-id sequence of one shortest path, or None.
 
     The reference's query is directed (``a-[…]->b``); ``direction`` mirrors
-    the traversal options for completeness.
+    the traversal options for completeness.  A frontier that grows past the
+    OLTP collect cap (a hub reached) raises instead of filling the driver.
     """
     if src_node_id == dst_node_id:
         return [src_node_id]
     spark = store.spark
     edges = _directed_edges(store.edges_df(), types, direction)
+    frontier = [(int(src_node_id), [int(src_node_id)])]
+    visited = {int(src_node_id)}
 
-    frontier = spark.createDataFrame(
-        [(int(src_node_id), [int(src_node_id)])], "node long, path array<long>"
-    )
-    visited = frontier.select("node")
-
-    for hop in range(1, max_hops + 1):
+    for _ in range(max_hops):
+        fdf = local_view(spark, frontier, FRONTIER_SCHEMA)
         expanded = (
-            frontier.join(edges, frontier["node"] == edges["src"], "inner")
+            fdf.join(edges, fdf["node"] == edges["src"], "inner")
             .select(
                 F.col("dst").alias("node"),
                 F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
             )
+            # smallest path per node → deterministic tie-breaking
+            .groupBy("node")
+            .agg(F.min("path").alias("path"))
         )
-        # smallest path per node → deterministic tie-breaking
-        expanded = expanded.groupBy("node").agg(F.min("path").alias("path"))
-        expanded = expanded.join(visited, on="node", how="left_anti")
-        if checkpoint_every and hop % checkpoint_every == 0:
-            expanded = expanded.localCheckpoint(eager=False)
-
-        hit = expanded.filter(F.col("node") == F.lit(int(dst_node_id))).select("path").take(1)
-        if hit:
-            return [int(x) for x in hit[0].path]
-
-        frontier = expanded
-        visited = visited.unionByName(expanded.select("node")).distinct()
-        if frontier.isEmpty():
+        rows = bounded_collect(expanded, context="shortest_path frontier")
+        frontier = [(r.node, list(r.path)) for r in rows if r.node not in visited]
+        for node, path in frontier:
+            if node == dst_node_id:
+                return path
+        if not frontier:
             return None
+        visited.update(node for node, _ in frontier)
     return None
 
 

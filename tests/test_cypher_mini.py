@@ -107,6 +107,28 @@ def test_execute_shortest_path(engine):
     assert path == [a, d["bob"].get_node_id(), z]
 
 
+def test_execute_shortest_path_honours_hop_bound(engine):
+    """``*..1`` caps the BFS at one hop: alice reaches zoe only in two."""
+    d = engine.fixture_docs
+    a, z = d["alice"].get_node_id(), d["zoe"].get_node_id()
+    path = engine.query_graph(
+        f"START a = node({a}), b = node({z}) "
+        f"MATCH path = shortestPath(a-[:knows*..1]->b) RETURN path;"
+    )
+    assert path is None
+
+
+def test_execute_shortest_path_honours_arrow_direction(engine):
+    """``a<-[...]-b`` walks edges backwards: zoe->alice is one hop."""
+    d = engine.fixture_docs
+    a, z = d["alice"].get_node_id(), d["zoe"].get_node_id()
+    path = engine.query_graph(
+        f"START a = node({a}), b = node({z}) "
+        f"MATCH path = shortestPath(a<-[:knows*..15]-b) RETURN path;"
+    )
+    assert path == [a, z]
+
+
 def test_execute_delete_node_template(engine):
     d = engine.fixture_docs
     nid = d["bob"].get_node_id()

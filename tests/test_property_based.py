@@ -13,7 +13,7 @@ from __future__ import annotations
 import re
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from mongraph_spark.cypher_mini import parse
@@ -168,6 +168,104 @@ def test_cypher_delete_node_template_roundtrip(n):
     assert q["starts"]["n"] == [n]
     assert q["action"] == "DELETE"
     assert q["parts"] == ["n", "r"]
+
+
+# -- single-pair BFS == brute-force smallest shortest path ---------------------------
+#
+# paths.shortest_path over a random MutableCatalog graph must return the
+# shortest path within max_hops, and among equal lengths the smallest
+# node-id sequence; the oracle enumerates every simple path instead of
+# running a BFS, so it shares no logic with the engine.
+
+_BFS_TYPES = ["knows", "likes"]
+
+
+@st.composite
+def _bfs_cases(draw):
+    nodes = draw(st.lists(st.integers(1, 60), min_size=1, max_size=7, unique=True))
+    pick = st.sampled_from(nodes)
+    edges = draw(st.lists(st.tuples(pick, pick, st.sampled_from(_BFS_TYPES)), max_size=14))
+    return {
+        "nodes": nodes,
+        "edges": edges,
+        "src": draw(pick),
+        "dst": draw(pick),
+        "types": draw(st.sampled_from([None, ["knows"], ["likes"], _BFS_TYPES])),
+        "direction": draw(st.sampled_from(["outgoing", "incoming", "both"])),
+        "max_hops": draw(st.integers(1, 4)),
+    }
+
+
+def _brute_shortest_path(case) -> list[int] | None:
+    adj: dict[int, set[int]] = {}
+    for s, d, t in case["edges"]:
+        if case["types"] is not None and t not in case["types"]:
+            continue
+        if case["direction"] in ("outgoing", "both"):
+            adj.setdefault(s, set()).add(d)
+        if case["direction"] in ("incoming", "both"):
+            adj.setdefault(d, set()).add(s)
+    best = None
+
+    def walk(path):
+        nonlocal best
+        if path[-1] == case["dst"]:
+            if best is None or (len(path), path) < (len(best), best):
+                best = list(path)
+            return
+        if len(path) > case["max_hops"]:
+            return
+        for nxt in adj.get(path[-1], ()):
+            if nxt not in path:
+                walk(path + [nxt])
+
+    walk([case["src"]])
+    return best
+
+
+_TIE = [(1, 2, "knows"), (1, 3, "knows"), (2, 9, "knows"), (3, 9, "knows")]
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=_bfs_cases())
+@example(  # src == dst
+    case={"nodes": [4], "edges": [], "src": 4, "dst": 4, "types": None,
+          "direction": "outgoing", "max_hops": 1}
+)
+@example(  # unreachable: the only edge points away from dst
+    case={"nodes": [1, 2], "edges": [(2, 1, "knows")], "src": 1, "dst": 2, "types": None,
+          "direction": "outgoing", "max_hops": 4}
+)
+@example(  # two equal-length paths: the smaller node ids win, in every direction
+    case={"nodes": [1, 2, 3, 9], "edges": _TIE, "src": 1, "dst": 9, "types": ["knows"],
+          "direction": "both", "max_hops": 2}
+)
+@example(  # the hop bound cuts a path that exists one hop further
+    case={"nodes": [1, 2, 3, 9], "edges": _TIE, "src": 9, "dst": 1, "types": None,
+          "direction": "incoming", "max_hops": 1}
+)
+def test_single_pair_bfs_matches_brute_force(spark, case):
+    from mongraph_spark.catalog import MutableCatalog
+    from mongraph_spark.paths import shortest_path
+
+    cat = MutableCatalog(spark)
+    for nid in case["nodes"]:
+        cat.upsert_node(nid, f"d{nid}", "c")
+    for s, d, t in case["edges"]:
+        cat.insert_edge(s, d, t)
+    got = shortest_path(
+        cat,
+        case["src"],
+        case["dst"],
+        types=case["types"],
+        direction=case["direction"],
+        max_hops=case["max_hops"],
+    )
+    assert got == _brute_shortest_path(case)
 
 
 # -- CoW store: random mutation sequences vs a dict model ----------------------------

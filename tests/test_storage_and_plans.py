@@ -102,6 +102,125 @@ def test_bucketed_edge_join_skips_big_side_shuffle(spark):
     assert n_exchanges <= 1, plan
 
 
+# -- MutableCatalog views: Arrow-built local relations --------------------------------
+
+
+def _spark_jobs(spark, group: str, call) -> int:
+    """Number of Spark jobs ``call`` runs, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_views_are_local_table_scans(engine):
+    cat = engine.catalog
+    views = [cat.nodes_df(), cat.edges_df()] + [
+        cat.documents_df(c) for c in cat.collection_names()
+    ]
+    for df in views:
+        assert _plan_of(df).startswith("LocalTableScan"), _plan_of(df)
+
+
+def test_remove_relationships_to_runs_no_spark_job(engine, spark):
+    d = engine.fixture_docs
+    engine.catalog.edges_df()  # views built before counting, as after any read
+    removed = []
+    jobs = _spark_jobs(
+        spark,
+        "remove_relationships_to",
+        lambda: removed.append(d["alice"].remove_relationships_to(d["bob"], "knows")),
+    )
+    assert removed == [1]
+    assert jobs == 0
+
+
+def test_catalog_views_match_create_dataframe(spark):
+    from pyspark.sql import types as T
+
+    from mongraph_spark.catalog import EDGE_SCHEMA, NODE_SCHEMA, MutableCatalog
+
+    schema = T.StructType(
+        [
+            T.StructField("_id", T.StringType(), False),
+            T.StructField("n", T.LongType(), True),
+            T.StructField("x", T.DoubleType(), True),
+            T.StructField("ok", T.BooleanType(), True),
+            T.StructField(
+                "msg",
+                T.StructType(
+                    [
+                        T.StructField("title", T.StringType(), True),
+                        T.StructField("meta", T.StructType([T.StructField("k", T.LongType(), True)]), True),
+                    ]
+                ),
+                True,
+            ),
+            T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
+            T.StructField("ids", T.ArrayType(T.LongType()), True),
+        ]
+    )
+    docs = [
+        {"_id": "a", "n": 1, "x": 0.5, "ok": True, "msg": {"title": "t", "meta": {"k": 7}},
+         "tags": {"p": "q", "r": "s"}, "ids": [3, 1]},
+        {"_id": "b", "n": None, "msg": {"title": None, "meta": None}, "tags": {}, "ids": []},
+        {"_id": "c", "msg": None, "tags": None, "ids": None},
+    ]
+    cat = MutableCatalog(spark)
+    cat.register_collection("docs", schema)
+    cat.register_collection("empty", schema)
+    for doc in docs:
+        cat.upsert_document("docs", doc)
+    cat.upsert_node(1, "a", "docs", {"w": 2, "flag": False, "gone": None})
+    cat.upsert_node(2, "b", "docs")
+    cat.insert_edge(1, 2, "knows", {"since": "years"}, _from="a", _to="b", _created_at=5)
+    cat.insert_edge(2, 1, "knows")
+
+    expected = [
+        (cat.documents_df("docs"), [tuple(d.get(f.name) for f in schema.fields) for d in docs], schema),
+        (cat.documents_df("empty"), [], schema),
+        (
+            cat.nodes_df(),
+            [(1, "a", "docs", {"w": "2", "flag": "false"}), (2, "b", "docs", {})],
+            NODE_SCHEMA,
+        ),
+        (
+            cat.edges_df(),
+            [
+                (1, 1, 2, "knows", "a", "b", 5, {"since": "years"}),
+                (2, 2, 1, "knows", None, None, None, {}),
+            ],
+            EDGE_SCHEMA,
+        ),
+    ]
+    for view, rows, view_schema in expected:
+        ref = spark.createDataFrame(rows, schema=view_schema)
+        assert view.schema == ref.schema
+        assert view.dtypes == ref.dtypes
+        assert view.collect() == ref.collect()
+
+
+def test_catalog_view_rejects_wrong_field_type(spark):
+    """pyarrow alone would truncate 1.5 into a long; the view must raise."""
+    from pyspark.sql import types as T
+
+    from mongraph_spark.catalog import MutableCatalog
+
+    cat = MutableCatalog(spark)
+    cat.register_collection(
+        "people",
+        T.StructType(
+            [T.StructField("_id", T.StringType(), False), T.StructField("age", T.LongType(), True)]
+        ),
+    )
+    cat.upsert_document("people", {"_id": "p", "age": 1.5})
+    with pytest.raises(TypeError):
+        cat.documents_df("people")
+
+
 # -- ingestion sources ---------------------------------------------------------------
 
 
